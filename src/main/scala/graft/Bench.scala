@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // trimmed-median-of-N per query: BENCH_r08 showed ambient machine load
     // can inflate single reps 8× (q140 ran [69.4, 15.7, 28.5] s on the
     // driver vs ~5.4 s isolated), and a plain median-of-3 passes one bad
@@ -12,87 +10,41 @@ object Bench {
     // median of the rest.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    val spark = Sessions.benchBuilder(cpus).getOrCreate()
+    val spark = Sessions.benchBuilder(Sessions.cpus).getOrCreate()
     // ERROR, not WARN: the driver parses the JSON line out of a bounded
     // 2000-char stdout TAIL, and sbt relays the forked JVM's stderr into
     // that same stream ("[error] ... WARN ResolveWriteToStream ...").
     // BENCH_r04 was "parsed": null because the streaming queries' per-run
     // WARN flood landed AFTER the JSON line in the tail window.
     spark.sparkContext.setLogLevel("ERROR")
-    // warm the JVM/codegen/parquet-reader/shuffle paths once so the first
-    // timed query isn't charged for session initialization
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try graft.Tables.load(spark, sfDir, "customer")
-      .groupBy("c_mktsegment").count().count()
-    catch { case _: Throwable => () }
-    // Per-query shuffle-byte accounting (round-6 stretch ask): totals and
-    // the largest single-task shuffle read (the skew indicator) land in
-    // bench_detail.json — turning the 100×-scale review from plan reading
-    // into numbers. Listener events are async; a short drain pause after
-    // each query's reps bounds cross-query smear to noise.
-    object ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-      val w = new java.util.concurrent.atomic.AtomicLong(0)
-      val r = new java.util.concurrent.atomic.AtomicLong(0)
-      val maxTaskR = new java.util.concurrent.atomic.AtomicLong(0)
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          w.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val tr = m.shuffleReadMetrics.totalBytesRead
-          r.addAndGet(tr)
-          maxTaskR.getAndAccumulate(tr, math.max(_, _))
-        }
-      }
-      def reset(): Unit = { w.set(0); r.set(0); maxTaskR.set(0) }
-    }
-    spark.sparkContext.addSparkListener(ShuffleMeter)
+    Sessions.warmUp(spark, sfDir)
+    // Per-query task accounting (round-6 stretch ask, round-15 profiler
+    // folded in): shuffle totals and the largest single-task shuffle read
+    // (the skew indicator), plus jobs/stages/tasks, summed task run/CPU/
+    // GC/fetch/scheduler time and the longest stages — every pass
+    // explains its own time in bench_detail.json.
+    val meter = TaskMeter(spark)
 
     // optional regex filter for iterating on individual queries
     val selected = args.headOption
       .map(p => Registry.all.filter(_.name.matches(p)))
       .getOrElse(Registry.all)
-    val results: Seq[(String, Seq[Double], Int, (Long, Long, Long))] = selected.map { q =>
-      var errors = 0
-      ShuffleMeter.reset()
-      val runs = (1 to reps).flatMap { _ =>
-        // Cache isolation: queries persist() intermediates they reference
-        // more than once; without clearing, q19's cached signatures would
-        // subsidize q40/q46 and repeated runs would accumulate entries —
-        // per-query numbers become order-dependent and memory-coupled.
-        spark.catalog.clearCache()
-        // Heap isolation: 60+ queries of accumulated garbage otherwise
-        // charges late-registry queries for their predecessors' collections
-        // (r03: q32 measured 5-7 s mid-registry vs 1.3 s isolated). The GC
-        // runs OUTSIDE the timed window.
-        System.gc()
-        val t0 = System.nanoTime()
-        // Force FULL materialization of every column with the noop sink:
-        // a bare .count() lets Catalyst prune unreferenced projections, so
-        // projection-heavy queries would be timed as scan+count only.
-        try {
-          q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          // a failed run must NOT fold its near-zero elapsed time into the
-          // median — a broken query would read as a dramatic speedup
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-          errors += 1
-          None
-        }
+    val results: Seq[(String, Seq[Double], Int, Seq[TaskMeter.Measured[scala.util.Try[Unit]]])] =
+      selected.map { q =>
+        // noopWrite isolates each run: no predecessor's cache, and no
+        // predecessor's garbage (r03: q32 measured 5-7 s mid-registry vs
+        // 1.3 s isolated)
+        val attempts = (1 to reps).map(_ => meter.noopWrite(spark)(q.fn(spark, sfDir)))
+        // a failed run must NOT fold its near-zero elapsed time into the
+        // median — a broken query would read as a dramatic speedup
+        attempts.foreach(_.value.failed.foreach(e =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")))
+        val runs = attempts.filter(_.value.isSuccess).map(_.sec)
+        if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
+          System.err.println(s"[bench-debug] ${q.name} runs: " +
+            runs.map(r => f"$r%.2f").mkString(", "))
+        (q.name, runs, attempts.size - runs.size, attempts)
       }
-      if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-        System.err.println(s"[bench-debug] ${q.name} runs: " +
-          runs.map(r => f"$r%.2f").mkString(", "))
-      Thread.sleep(150) // drain the async listener bus before reading
-      // divide by ATTEMPTS: failed runs' bytes are in the meter too, so
-      // dividing by successes alone would inflate per-run shuffle for
-      // exactly the queries that are breaking
-      val per = math.max(runs.size + errors, 1)
-      (q.name, runs, errors,
-        (ShuffleMeter.w.get() / per, ShuffleMeter.r.get() / per,
-          ShuffleMeter.maxTaskR.get()))
-    }
     spark.catalog.clearCache()
     // all-runs-failed -> sentinel -1 so a breakage is unmistakable in the
     // emitted JSON (not just on stderr). TRIMMED median: the single worst
@@ -146,11 +98,21 @@ object Bench {
     // for 68 queries) and overflowed that buffer -> BENCH_r03 "parsed":
     // null. Keep the printed line compact (medians only); the per-run
     // arrays go to a sidecar file for human inspection instead.
-    val shuffleJson = results.map { case (k, _, _, (sw, sr, mx)) =>
-      s"\"" + k + s"\":{\"write\":$sw,\"read\":$sr,\"maxTaskRead\":$mx}"
+    // shuffle bytes per ATTEMPT: failed runs' bytes are metered too, so
+    // dividing by successes alone would inflate per-run shuffle for
+    // exactly the queries that are breaking
+    val shuffleJson = results.map { case (k, _, _, ms) =>
+      def perRun(f: TaskMeter.Stage => Long) = ms.map(_.sum(f)).sum / ms.size
+      s"\"" + k + s"\":{\"write\":${perRun(_.shuffleWrite)},\"read\":${perRun(_.shuffleRead)}," +
+        s"\"maxTaskRead\":${ms.flatMap(_.stages.map(_.maxTaskRead)).maxOption.getOrElse(0L)}}"
+    }.mkString("{", ",", "}")
+    // task sums and top stages of the last rep: one execution's jobs,
+    // stages and where their task time went
+    val tasksJson = results.map { case (k, _, _, ms) =>
+      s"\"" + k + "\":" + ms.last.json
     }.mkString("{", ",", "}")
     val detail =
-      s"""{"medians":$mediansFull,"mins":$minsJson,"runs":$runsJson,"errors":$errJson,"shuffle":$shuffleJson,"reps":$reps,"sf":"$sfDir"}"""
+      s"""{"medians":$mediansFull,"mins":$minsJson,"runs":$runsJson,"errors":$errJson,"shuffle":$shuffleJson,"tasks":$tasksJson,"reps":$reps,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_detail.json"), detail)

@@ -2,8 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The measured session configuration the bench/profile harnesses share
-  * (round 15, optimization-guide §1 "measure first" → §2.2 partition
+/** The one session factory: Bench, Verify, Plans, RunPipeline, Smoke and
+  * the test session all build from [[Sessions.benchBuilder]], so the
+  * oracle gate and the tests check the configuration that is timed.
+  *
+  * The measured session configuration (round 15, optimization-guide §1
+  * "measure first" → §2.2 partition
   * sizing → §6 I/O). Every entry here was A/B-measured on the 7-query
   * working set (q137/q215/q314/q322/q133/q293/q231, sf0.1, local[32],
   * reps=5) before being committed — numbers in OPTIMIZATION_r15.md §2:
@@ -46,6 +50,22 @@ import org.apache.spark.sql.SparkSession
   * suite 36.1 → 30.6 s, measured GC time in task metrics drops ~3×.)
   */
 object Sessions {
+  /** The one session knob: `SPARK_GRAFT_CPUS`, by default every core the
+    * JVM sees.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** Warms the JVM, codegen, parquet-reader and shuffle paths once, so the
+    * first timed operation is not charged for session initialization. A
+    * missing `customer` table under `sfDir` skips the parquet half.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    try Tables.load(spark, sfDir, "customer").groupBy("c_mktsegment").count().count()
+    catch { case _: Throwable => () }
+  }
+
   def benchBuilder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -37,7 +37,7 @@ import graft.pipeline.ParquetIO
   * DuckDB oracle re-derives the full band table relationally and the
   * probe's equality proves persisted banding ≡ recomputed banding;
   * [[graft.LshIndexSpec]] proves the same at the FILE level across an
-  * append, and [[graft.LshAppendSmoke]] measures the O(delta) claim.
+  * append, and [[graft.Smoke]] `lsh` measures the O(delta) claim.
   */
 object LshIndex extends ArtifactStore {
 

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{GraftQuery, Tables}
+import graft.{FileTree, GraftQuery, Tables}
 import graft.pipeline.ParquetIO
 
 /** Lakehouse maintenance + multi-writer operators: the table-management
@@ -69,7 +69,7 @@ object Maintenance {
     // materialize (bounded: one row per customer) before the temp table
     // is deleted — the q125 harness hygiene, not an operator pattern
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(target).getParent)
+    FileTree.delete(java.nio.file.Paths.get(target).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
@@ -108,14 +108,9 @@ object Maintenance {
         lit(filesBefore == 48 && stats.filesAfter < stats.filesBefore)
           .as("files_reduced"))
     val rows = out.collect() // 1 row; frees the temp table for deletion
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    FileTree.delete(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
 
   /** q181: merge-on-read deletes — at 100 TB a DELETE that rewrites a
     * 1 GB file to drop 3 rows is the copy-on-write death spiral, so
@@ -159,7 +154,7 @@ object Maintenance {
       .select($"n_docs", $"content_checksum",
         lit(untouched && n1 > 0 && n2 > 0 && ratio > 0).as("no_rewrite"))
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    FileTree.delete(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
@@ -213,7 +208,7 @@ object Maintenance {
       .select($"n_rows", $"total_bal", $"n_inserted",
         lit(onlyAdded).as("no_rewrite"))
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    FileTree.delete(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
@@ -278,7 +273,7 @@ object Maintenance {
         lit(n > 0 && ttClean && histOk && files == before)
           .as("forgotten_everywhere"))
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    FileTree.delete(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 

@@ -161,7 +161,7 @@ object Mining {
 
   /** The production arm alone — per-hop sketch estimates with no exact
     * closure: O(nodes · sketch) state, one shuffle per hop, at ANY
-    * scale. [[graft.ScaleSmoke]] measures THIS (the exact arm is the
+    * scale. [[graft.Smoke]] `scale` measures THIS (the exact arm is the
     * test-scale verification harness and is quadratic by design — the
     * same truth-vs-production split as q53's fixed query sample).
     */

@@ -1457,7 +1457,7 @@ object Similarity {
     * cadence only the two delta-touching terms run — O(|delta| ·
     * cell-occupancy) pair work + one O(|delta|·k) routing pass, never
     * a corpus re-scan (the base×base term reads the materialized
-    * verdicts; [[graft.DeltaSelectSmoke]] measures exactly that split:
+    * verdicts; [[graft.Smoke]] `delta-select` measures exactly that split:
     * bytes read by the delta arm vs the full recompute). Round 11:
     * both arms run inside the [[SemDedupGaugeCap]] md5-ranked slice —
     * see the cap's scaladoc; gate-SF outputs unchanged.
@@ -1470,7 +1470,7 @@ object Similarity {
     * scaling with the corpus. At the correctness-gate SFs (≤ cap
     * vectors) the slice IS the corpus, so outputs there are unchanged.
     * The PRODUCTION arm's O(delta) claim is measured separately on the
-    * uncapped corpus by [[graft.DeltaSelectSmoke]].
+    * uncapped corpus by [[graft.Smoke]] `delta-select`.
     */
   val SemDedupGaugeCap = 2000
 
@@ -1524,7 +1524,7 @@ object Similarity {
 
   /** Probe-1 routing + centroid similarity against a frozen codebook —
     * the shared assign stage of the incremental selection arm (q292 and
-    * [[graft.DeltaSelectSmoke]]).
+    * [[graft.Smoke]] `delta-select`).
     */
   def semdedupAssign(s: SparkSession, ev: DataFrame, cb: DataFrame): DataFrame = {
     import s.implicits._

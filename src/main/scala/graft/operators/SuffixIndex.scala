@@ -63,7 +63,7 @@ import graft.pipeline.ParquetIO
   * chunks resolves every cross-chunk comparison by counting — the
   * k-copies-of-one-boilerplate group aggregates to ONE distinct-chunk
   * row per round, so its cost is k·log(maxlen) rows of bookkeeping,
-  * never k² comparisons ([[graft.SuffixSkewSmoke]] measures the
+  * never k² comparisons ([[graft.Smoke]] `suffix-skew` measures the
   * growth). Only groups within the cap (or the identical-suffix
   * terminal sets' tie-breaks) ever materialize pairwise rows.
   *
@@ -79,8 +79,8 @@ import graft.pipeline.ParquetIO
   * [[q322SuffixMerge]] oracle-carries the merge algebra (merged
   * permutation ≡ brute-force sorted-suffix truth, q311's own oracle);
   * [[graft.SuffixIndexSpec]] proves append ≡ rebuild at the file level
-  * for BOTH tables; [[graft.SuffixAppendSmoke]] measures the
-  * O(delta)-rounds claim; [[graft.SuffixSkewSmoke]] the multiplicity
+  * for BOTH tables; [[graft.Smoke]] `suffix` measures the
+  * O(delta)-rounds claim; [[graft.Smoke]] `suffix-skew` the multiplicity
   * bound.
   */
 object SuffixIndex extends ArtifactStore {

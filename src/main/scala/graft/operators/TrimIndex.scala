@@ -55,7 +55,7 @@ import graft.pipeline.ParquetIO
   * append ALGEBRA itself (base+delta composition ≡ full recompute, the
   * q302 pattern); [[graft.TrimIndexSpec]] proves the same at the FILE
   * level across an append plus the cap-crossing fallback; and
-  * [[graft.TrimAppendSmoke]] measures the O(delta) claim.
+  * [[graft.Smoke]] `trim` measures the O(delta) claim.
   */
 object TrimIndex extends ArtifactStore {
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
-import graft.GraftQuery
+import graft.{FileTree, GraftQuery}
 import graft.functions.Fns.exactSum2
 
 /** Structured Streaming surface (SURVEY.md §2.8). The reference is
@@ -403,8 +403,8 @@ object StreamingOps {
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
       try s.catalog.dropTempView(name) catch { case _: Throwable => () }
-      rmTree(ckptDir)
-      rmTree(srcDir)
+      FileTree.delete(ckptDir)
+      FileTree.delete(srcDir)
     }
   }
 
@@ -469,12 +469,6 @@ object StreamingOps {
       |WHERE s.session_seq < l.last_seq
       |   OR epoch_ms(s.session_end) + 1800000 < mx.max_ms - 7200000
       |ORDER BY s.user_id, s.session_seq""".stripMargin
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    java.nio.file.Files.walk(p)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   /** q63: the watermarked tumbling-window aggregation, ORACLE-CARRIED —
     * [[hourlyCounts]] run as a real continuous query (file source →
@@ -732,7 +726,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(tgtRoot)
     }
   }
 
@@ -784,7 +778,7 @@ object StreamingOps {
           java.nio.file.Files.move(dataFile, dst)
           java.nio.file.Files.setLastModifiedTime(dst,
             java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-          rmTree(stage)
+          FileTree.delete(stage)
       }
       ParquetIO.overwriteSwap(s1, tgtDir) // the replica starts at S1
       val q = s.readStream
@@ -809,7 +803,7 @@ object StreamingOps {
       val rows = out.collect() // O(dimension) — frees the temp replica
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(tgtRoot)
     }
   }
 
@@ -865,7 +859,7 @@ object StreamingOps {
         java.nio.file.Files.move(dataFile, dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-        rmTree(stage)
+        FileTree.delete(stage)
       }
       var compactions = 0
       val q = s.readStream
@@ -896,7 +890,7 @@ object StreamingOps {
       val rows = out.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(tgtRoot)
     }
   }
 
@@ -971,7 +965,7 @@ object StreamingOps {
         moved = true
       }
     }
-    rmTree(tmp)
+    FileTree.delete(tmp)
   }
 
   // ---------------------------------------------------------------- q227
@@ -1059,7 +1053,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 
@@ -1198,7 +1192,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 
@@ -1361,7 +1355,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 
@@ -1394,7 +1388,7 @@ object StreamingOps {
     * everything the stream delivered and (b) the maintenance actually
     * went through the merge arm, not a quiet rebuild. Per batch the
     * work is one base-window scan + delta windows + bounded collisions
-    * ([[graft.SuffixAppendSmoke]] measures the bytes: the two-batch
+    * ([[graft.Smoke]] `suffix` measures the bytes: the two-batch
     * cadence reads O(base + delta) per batch, vs the rebuild's full
     * doubling); the staged world is fingerprinted by the source
     * listing, so testdata regeneration re-exercises the whole loop
@@ -1455,11 +1449,11 @@ object StreamingOps {
       // testdata generations) before re-exercising the loop
       if (Files.exists(streamRoot)) {
         val st = Files.list(streamRoot)
-        try st.iterator().asScala.toSeq.foreach(rmTree)
+        try st.iterator().asScala.toSeq.foreach(FileTree.delete)
         finally st.close()
       }
       val stale = SuffixIndex.indexPathFor(staged.toString)
-      if (Files.exists(stale)) rmTree(stale)
+      if (Files.exists(stale)) FileTree.delete(stale)
       Files.createDirectories(staged)
       val pool = Dedup.suffixPoolDocs(graft.Tables.load(s, dir, "documents"))
         .persist()
@@ -1482,7 +1476,7 @@ object StreamingOps {
               incoming.resolve(s"$tag-${p.getFileName}"),
               StandardCopyOption.ATOMIC_MOVE))
           finally st.close()
-          rmTree(scratch)
+          FileTree.delete(scratch)
       }
       pool.unpersist(false)
       val ckpt = stageRoot.resolve("ckpt")
@@ -1505,7 +1499,7 @@ object StreamingOps {
                 docTable.resolve(s"delta$id-${p.getFileName}"),
                 StandardCopyOption.ATOMIC_MOVE))
             finally st.close()
-            rmTree(scratch)
+            FileTree.delete(scratch)
             SuffixIndex.ensure(s, staged.toString)
             ()
         }
@@ -1682,9 +1676,9 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir)
-      rmTree(srcDir)
-      rmTree(tgtRoot)
+      FileTree.delete(ckptDir)
+      FileTree.delete(srcDir)
+      FileTree.delete(tgtRoot)
     }
   }
 
@@ -1741,7 +1735,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        FileTree.delete(tmp)
       }
       stage(0); stage(1)
 
@@ -1814,7 +1808,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 
@@ -1863,7 +1857,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        FileTree.delete(tmp)
       }
       stage(0); stage(1)
 
@@ -1928,7 +1922,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 
@@ -2007,7 +2001,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        FileTree.delete(tmp)
       }
       stage(0, deltaIn); stage(1, shifted)
 
@@ -2052,7 +2046,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      FileTree.delete(ckptDir); FileTree.delete(srcDir); FileTree.delete(outRoot)
     }
   }
 }

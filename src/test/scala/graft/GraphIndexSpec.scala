@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
@@ -23,24 +23,9 @@ class GraphIndexSpec extends AnyFunSuite {
   private def writeTable(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit =
     df.write.mode("overwrite").parquet(dir.resolve(s"$name.parquet").toString)
 
-  /** Move a scratch-written parquet's data files INTO an existing table
-    * directory under fresh names — the append-only growth pattern
-    * (old files' name:size:mtime untouched).
-    */
-  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path, name: String, tag: String): Unit = {
-    val scratch = Files.createTempDirectory("graph-delta")
-    df.write.mode("overwrite").parquet(scratch.toString)
-    val target = dir.resolve(s"$name.parquet")
-    val st = Files.list(scratch)
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, target.resolve(s"$tag-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
+  /** Land df's data files in dir/name.parquet (append-only growth). */
+  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit =
+    FileTree.landDelta(df, dir.resolve(s"$name.parquet"), Files.createTempDirectory("graph-delta"))
 
   private def edgeSet(dir: String): Set[(String, String)] = {
     import spark.implicits._
@@ -80,8 +65,8 @@ class GraphIndexSpec extends AnyFunSuite {
     val edgesT = operators.GraphIndex.tableDir(grownDir.toString, "edges")
     val vBase = pipeline.ParquetIO.currentVersion(edgesT).get
 
-    landDelta(o.filter(isDelta($"o_orderkey")), grownDir, "orders", "delta")
-    landDelta(l.filter(isDelta($"l_orderkey")), grownDir, "lineitem", "delta")
+    landDelta(o.filter(isDelta($"o_orderkey")), grownDir, "orders")
+    landDelta(l.filter(isDelta($"l_orderkey")), grownDir, "lineitem")
     val grownEdges = edgeSet(grownDir.toString)
     val grownDegs = degMap(grownDir.toString)
 
@@ -135,7 +120,7 @@ class GraphIndexSpec extends AnyFunSuite {
     val edgesT = operators.GraphIndex.tableDir(dir.toString, "edges")
     val vBase = pipeline.ParquetIO.currentVersion(edgesT).get
 
-    landDelta(l.filter(isDelta($"l_orderkey")), dir, "lineitem", "delta")
+    landDelta(l.filter(isDelta($"l_orderkey")), dir, "lineitem")
     val grownEdges = edgeSet(dir.toString)
 
     val fullDir = Files.createTempDirectory("graph-onesided-full")

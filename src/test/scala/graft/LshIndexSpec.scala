@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,20 +15,8 @@ class LshIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path): Unit = {
-    val scratch = Files.createTempDirectory("lsh-delta")
-    df.write.mode("overwrite").parquet(scratch.toString)
-    val target = dir.resolve("documents.parquet")
-    val st = Files.list(scratch)
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, target.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
+  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path): Unit =
+    FileTree.landDelta(df, dir.resolve("documents.parquet"), Files.createTempDirectory("lsh-delta"))
 
   private def bandSet(dir: String): Set[(Long, Int, String)] = {
     import spark.implicits._

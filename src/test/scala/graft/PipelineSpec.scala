@@ -358,4 +358,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(pipeline.ParquetIO.read(spark, dir).count() == 2)
     assert(!Files.exists(lock), "lock must be released after the commit")
   }
+
+  test("RunPipeline manifest parses and its per-model rows equal the table counts") {
+    val dir = Files.createTempDirectory("graft-run").toString
+    val (results, manifest) =
+      graft.pipeline.RunPipeline.run(spark, res("landing1"), dir, t1)
+    val parsed = spark.read.option("multiLine", "true").json(manifest.toString)
+    assert(parsed.columns.contains("invocation_id"))
+    assert(parsed.select(explode(col("tests"))).count() == results.size)
+    val models = parsed.select(explode(col("models")).as("m"))
+      .select("m.layer", "m.table", "m.rows").collect()
+    assert(models.length == 11)
+    val p = new Pipeline(spark, dir)
+    models.foreach { r =>
+      assert(r.getLong(2) == p.read(r.getString(0), r.getString(1)).count(),
+        s"${r.getString(0)}.${r.getString(1)}")
+    }
+  }
 }

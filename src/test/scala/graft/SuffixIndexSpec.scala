@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.functions.{length, sum}
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,20 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class SuffixIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path): Unit = {
-    val scratch = Files.createTempDirectory("suffix-delta")
-    df.write.mode("overwrite").parquet(scratch.toString)
-    val target = dir.resolve("documents.parquet")
-    val st = Files.list(scratch)
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, target.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
+  private def landDelta(df: org.apache.spark.sql.DataFrame, dir: Path): Unit =
+    FileTree.landDelta(df, dir.resolve("documents.parquet"), Files.createTempDirectory("suffix-delta"))
 
   private def corpusDir(df: org.apache.spark.sql.DataFrame): Path = {
     val dir = Files.createTempDirectory("suffix-corpus")
