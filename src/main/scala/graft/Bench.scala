@@ -2,8 +2,8 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // trimmed-median-of-N per query: BENCH_r08 showed ambient machine load
-    // can inflate single reps 8× (q140 ran [69.4, 15.7, 28.5] s on the
+    // trimmed-median-of-N per query: round 8 (CHANGES.md) showed ambient
+    // machine load can inflate single reps 8× (q140 ran [69.4, 15.7, 28.5] s on the
     // driver vs ~5.4 s isolated), and a plain median-of-3 passes one bad
     // rep straight through. 5 reps with the max dropped bounds a single
     // contaminated rep's influence to zero and a second one's to the
@@ -14,8 +14,8 @@ object Bench {
     // ERROR, not WARN: the driver parses the JSON line out of a bounded
     // 2000-char stdout TAIL, and sbt relays the forked JVM's stderr into
     // that same stream ("[error] ... WARN ResolveWriteToStream ...").
-    // BENCH_r04 was "parsed": null because the streaming queries' per-run
-    // WARN flood landed AFTER the JSON line in the tail window.
+    // Round 4 (CHANGES.md) was "parsed": null because the streaming
+    // queries' per-run WARN flood landed AFTER the JSON line in the tail.
     spark.sparkContext.setLogLevel("ERROR")
     Sessions.warmUp(spark, sfDir)
     // Per-query task accounting (round-6 stretch ask, round-15 profiler
@@ -50,7 +50,7 @@ object Bench {
     // emitted JSON (not just on stderr). TRIMMED median: the single worst
     // rep is dropped before taking the median (>=3 runs), so one
     // load-spike rep can no longer drag the reported number — the
-    // contamination mode that inflated BENCH_r08 2-5× on the graph family.
+    // contamination mode that inflated round 8 2-5× on the graph family.
     def median(xs: Seq[Double]): Double = {
       if (xs.isEmpty) return -1.0
       val s0 = xs.sorted
@@ -95,8 +95,8 @@ object Bench {
     val total = results.map(r => math.max(median(r._2), 0.0)).sum
     // The driver captures only a bounded TAIL of stdout and parses the one
     // JSON line from it. r03's line carried the full per-run arrays (~6 KB
-    // for 68 queries) and overflowed that buffer -> BENCH_r03 "parsed":
-    // null. Keep the printed line compact (medians only); the per-run
+    // for 68 queries) and overflowed that buffer -> "parsed": null
+    // (CHANGES.md). Keep the printed line compact (medians only); the per-run
     // arrays go to a sidecar file for human inspection instead.
     // shuffle bytes per ATTEMPT: failed runs' bytes are metered too, so
     // dividing by successes alone would inflate per-run shuffle for
@@ -119,7 +119,7 @@ object Bench {
       // round-stamped copy (VERDICT r13 "What's wrong" #3: the driver's
       // per-round pass overwrites the live sidecar, losing the builder's
       // closing-pass record) — the builder sets SPARK_GRAFT_BENCH_STAMP
-      // to e.g. bench_detail_r14.json for passes that must survive
+      // to e.g. bench_detail_r15.json for passes that must survive
       sys.env.get("SPARK_GRAFT_BENCH_STAMP").foreach(f =>
         java.nio.file.Files.writeString(java.nio.file.Paths.get(f), detail))
     } catch { case e: Throwable =>
@@ -141,7 +141,7 @@ object Bench {
     // minTotal — the clean-machine bound for the whole registry — and
     // (b) a "noisy" map (id -> min) of queries whose trimmed median
     // STILL sits 1.5x + 0.5s above their own min, i.e. where even the
-    // robust estimate ran under ambient load. A contaminated BENCH_rN
+    // robust estimate ran under ambient load. A contaminated pass
     // now exposes its own correction instead of silently mis-grading
     // the round. Degrades to a bare count if the flagged set outgrows
     // the stdout-tail budget (which itself signals heavy contamination).
@@ -177,7 +177,7 @@ object Bench {
     // LAST-LINE CONTRACT (round-9 verdict ask #7): the JSON line must be
     // the forked JVM's final stdout. spark.stop() already ran above, but
     // executor/BlockManager shutdown chatter drains ASYNCHRONOUSLY into
-    // stderr, which sbt relays interleaved with stdout — BENCH_r09's tail
+    // stderr, which sbt relays interleaved with stdout — round 9's tail
     // caught such a fragment ABOVE the line (harmless) and could in
     // principle catch one below it (fatal to the driver's tail parse).
     // Quiesce: give the late log relays a moment to drain, then print

@@ -601,7 +601,7 @@ object Smoke {
   /** The iterative graph/dedup family and the artifact builds on a
     * K-replica corpus ([[buildScaled]]; K=10 over sf0.1 is an sf~1-scale
     * corpus): seconds per query and per build — the measurement behind
-    * the linear-scaling claims PLANS.md records (plan shape says the
+    * the linear-scaling claims (records in CHANGES.md; plan shape says the
     * per-round cost is one join + keyed aggs; this checks the constant).
     */
   private def scale(c: Ctx): Obj = {

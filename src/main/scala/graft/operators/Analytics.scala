@@ -79,9 +79,9 @@ object Analytics {
     * destination. Iteration count is a PARAMETER (q89 runs 3, q133 runs
     * 10), with the two mechanisms a deep run needs:
     *
-    *  - `localCheckpoint()` each round truncates lineage, so the plan
-    *    submitted per iteration is one join-agg regardless of depth — a
-    *    10- or 50-iteration run costs linear time, not an
+    *  - [[Fixpoint]] cuts lineage each round, so the plan submitted
+    *    per iteration is one join-agg regardless of depth — a 10- or
+    *    50-iteration run costs linear time, not an
     *    exponentially-reanalyzed plan tree;
     *  - an EXACT-fixed-point early stop: ranks are rounded to 10 digits
     *    each round, so once the rounded vector repeats, every further
@@ -125,30 +125,23 @@ object Analytics {
     // co-partitioned edge list every iterative graph engine keeps.
     val edges = GraphIndex.degEdges(s, dir).repartition($"src").persist()
     edges.count()
-    var pr = deg.select($"src".as("node"), lit(1.0 / n).as("pr"))
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val prev = pr
+    val init = deg.select($"src".as("node"), lit(1.0 / n).as("pr"))
+    val pr = Fixpoint(iters, deg, edges)(init) { (prev, _) =>
       // r15: the exact-fixpoint probe rides the iteration frame (the
-      // prev vector joins in before the checkpoint), so convergence is
-      // a filter-count on materialized rows instead of a separate
-      // two-sided shuffle join job per round. Inner join is lossless:
-      // the undirected graph gives every node degree ≥ 1, so the agg
-      // output and prev carry the same node set; pr values unchanged.
-      val nxt = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
+      // prev vector joins in before the checkpoint). Inner join is
+      // lossless: the undirected graph gives every node degree ≥ 1, so
+      // the agg output and prev carry the same node set; pr values
+      // unchanged. `<=>` keeps the change column non-nullable, so
+      // Fixpoint's dropped-row filter folds away in the optimizer.
+      edges
+        .join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .select($"dst", ($"pr" / $"deg").as("contrib"))
         .groupBy($"dst")
         .agg(sum($"contrib").as("in_pr"))
         .select($"dst".as("node"),
           round(lit((1 - Damping) / n) + lit(Damping) * $"in_pr", 10).as("pr"))
         .join(prev.select($"node", $"pr".as("prev_pr")), Seq("node"))
-        .select($"node", $"pr", ($"pr" =!= $"prev_pr").as("chg"))
-        .localCheckpoint()
-      pr = nxt.select($"node", $"pr")
-      it += 1
-      if (it < iters) converged = nxt.filter($"chg").isEmpty
+        .select($"node", $"pr", (!($"pr" <=> $"prev_pr")).as(Fixpoint.Changed))
     }
     // Top-20 via orderBy().limit() -> TakeOrderedAndProject: every task
     // keeps a 20-row heap and only those survivors cross the exchange.
@@ -165,7 +158,7 @@ object Analytics {
     pageRank(s, dir, PrIters)
 
   /** q133: the 10-iteration run of [[pageRank]] — proves the deep-graph
-    * machinery (constant plan depth via localCheckpoint, linear cost per
+    * machinery ([[Fixpoint]]: constant plan depth, linear cost per
     * round, valid early stop) against a 10-CTE recursive oracle.
     */
   def q133PageRankDeep(s: SparkSession, dir: String): DataFrame =
@@ -215,23 +208,22 @@ object Analytics {
     * is why the round count is FIXED and mirrored in the unrolled
     * oracle — the query proves the distributed iteration machinery;
     * the semi-synchronous coloring fix is implemented as q157, keeping
-    * this one as the measured contrast. localCheckpoint per round = the
-    * q133 discipline.
+    * this one as the measured contrast. Rounds run through
+    * [[Fixpoint]].
     */
   def q140LabelPropagation(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = csEdges(s, dir).persist()
-    var labels = edges.select($"src".as("node"))
+    val edges = csEdges(s, dir).repartition($"src")
+    val init = edges.select($"src".as("node"))
       .distinct().withColumn("lbl", $"node")
-    for (_ <- 1 to LpaIters) {
-      labels = edges
-        .join(labels.withColumnRenamed("node", "src"), Seq("src"))
+    val labels = Fixpoint(LpaIters, edges)(init) { (prev, _) =>
+      edges
+        .join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy($"dst", $"lbl")
         .agg(count(lit(1)).as("c"))
         .groupBy($"dst")
         .agg(min(struct((-$"c").as("nc"), $"lbl".as("l"))).as("m"))
         .select($"dst".as("node"), $"m.l".as("lbl"))
-        .localCheckpoint()
     }
     labels.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("size"),
@@ -278,19 +270,20 @@ object Analytics {
     * mode of their customers' labels, then customers adopt the mode of
     * the JUST-UPDATED supplier labels. Same per-round plan shape as
     * q140 (join + two keyed aggs, mode as map-side struct-min, never a
-    * per-node sort), same localCheckpoint discipline, twice the
-    * half-rounds — and a fixed point synchronous LPA cannot promise on
-    * this topology. q140 stays registered as the contrast query.
+    * per-node sort), same [[Fixpoint]] rounds, twice the half-rounds —
+    * and a fixed point synchronous LPA cannot promise on this topology.
+    * q140 stays registered as the contrast query.
     */
   def q157LpaSemiSync(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = csEdges(s, dir).persist()
-    var labels = edges.select($"src".as("node"))
+    val edges = csEdges(s, dir).repartition($"src")
+    val init = edges.select($"src".as("node"))
       .distinct().withColumn("lbl", $"node")
-    for (_ <- 1 to LpaSemiRounds; side <- Seq("s", "c")) {
+    val labels = Fixpoint(2 * LpaSemiRounds, edges)(init) { (prev, half) =>
+      val side = if (half % 2 == 1) "s" else "c"
       val updated = edges
         .filter(substring($"dst", 1, 1) === side)
-        .join(labels.withColumnRenamed("node", "src"), Seq("src"))
+        .join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy($"dst", $"lbl")
         .agg(count(lit(1)).as("c"))
         .groupBy($"dst")
@@ -298,9 +291,7 @@ object Analytics {
         .select($"dst".as("node"), $"m.l".as("lbl"))
       // every node of this side has >= 1 cross-side edge (nodes are
       // defined by the edge list), so the union is a full replacement
-      labels = labels.filter(substring($"node", 1, 1) =!= side)
-        .unionByName(updated)
-        .localCheckpoint()
+      prev.filter(substring($"node", 1, 1) =!= side).unionByName(updated)
     }
     labels.groupBy($"lbl".as("community"))
       .agg(count(lit(1)).as("size"),
@@ -352,28 +343,27 @@ object Analytics {
     * round's newly-discovered nodes join the edge list, and a left-anti
     * join against the visited set keeps the work per round proportional
     * to the frontier, never the visited set squared. Fixed `BfsHops`
-    * rounds with `localCheckpoint` per round (the q133 discipline:
-    * constant plan depth, linear cost). The oracle unrolls the same
+    * rounds through [[Fixpoint]]. The oracle unrolls the same
     * frontier algebra as CTEs — a recursive-CTE walk would enumerate
     * every PATH (combinatorial on this dense bipartite graph); the
     * frontier form is the one that scales, in both engines.
     */
   def q145BfsDistance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = csEdges(s, dir).persist()
+    val edges = csEdges(s, dir).repartition($"src").persist()
     val inGraph = edges.select($"src".as("node")).distinct()
     val seeds = t(s, dir, "customer").filter($"c_nationkey" === 0)
       .select(concat(lit("c"), $"c_custkey").as("node"))
       .join(inGraph, Seq("node"), "left_semi")
-    var dist = seeds.withColumn("hops", lit(0)).localCheckpoint()
-    for (i <- 1 to BfsHops) {
-      val frontier = dist.filter($"hops" === i - 1)
+    val init = seeds.withColumn("hops", lit(0)).localCheckpoint()
+    val dist = Fixpoint(BfsHops, edges)(init) { (prev, i) =>
+      val frontier = prev.filter($"hops" === i - 1)
       val next = edges
         .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
         .select($"dst".as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
+        .join(prev, Seq("node"), "left_anti")
         .withColumn("hops", lit(i))
-      dist = dist.unionByName(next).localCheckpoint()
+      prev.unionByName(next)
     }
     dist.groupBy($"hops")
       .agg(count(lit(1)).as("n_nodes"),
@@ -769,8 +759,8 @@ object Analytics {
     * that makes PPR the scalable member of the PageRank family.
     * Undirected edges mean no dangling mass: total mass stays exactly
     * 1 per round. Same engine-exactness devices as q89: per-round
-    * round-10, localCheckpoint lineage truncation, fixed-point early
-    * stop indistinguishable from running the remaining rounds, and
+    * round-10, [[Fixpoint]] rounds with a fixed-point early stop
+    * indistinguishable from running the remaining rounds, and
     * TakeOrdered top-20 (never a global window over the vector).
     */
   def q224PersonalizedPagerank(s: SparkSession, dir: String): DataFrame = {
@@ -778,36 +768,36 @@ object Analytics {
     // deg pre-annotated onto the edge table ONCE (the q89/q133 hoist,
     // proven hash-identical there round 10: `pr / deg` divides the same
     // two values whether deg arrives by per-round join or by column)
-    val edges = GraphIndex.degEdges(s, dir).persist()
+    val edges = GraphIndex.degEdges(s, dir)
     val deg = GraphIndex.degrees(s, dir).persist()
     val seeds = deg.filter($"src".startsWith("c") &&
         substring($"src", 2, 20).cast("long") % PprSeedMod === 0)
       .select($"src".as("node"))
     val nSeeds = seeds.count()
     val su = 1.0 / nSeeds
-    val restart = seeds.withColumn("rmass", lit((1 - Damping) * su)).persist()
-    var pr = seeds.withColumn("pr", lit(su))
-    var it = 0
-    var converged = false
-    while (it < PprIters && !converged) {
-      val prev = pr
+    val restart = seeds.withColumn("rmass", lit((1 - Damping) * su))
+    val init = seeds.withColumn("pr", lit(su))
+    val pr = Fixpoint(PprIters, edges, deg, restart)(init) { (prev, it) =>
       val contrib = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
+        .join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .select($"dst", ($"pr" / $"deg").as("contrib"))
         .groupBy($"dst").agg(sum($"contrib").as("in_pr"))
         .select($"dst".as("node"), $"in_pr")
-      pr = restart.join(contrib, Seq("node"), "full")
+      val cur = restart.join(contrib, Seq("node"), "full")
         .select($"node",
           round(coalesce($"rmass", lit(0.0)) +
             lit(Damping) * coalesce($"in_pr", lit(0.0)), 10).as("pr"))
         .filter($"pr" > 0)
-        .localCheckpoint()
-      it += 1
-      if (it < PprIters)
-        converged = pr
-          .join(prev.withColumnRenamed("pr", "prev_pr"), Seq("node"), "full")
-          .filter($"pr".isNull || $"prev_pr".isNull || $"pr" =!= $"prev_pr")
-          .isEmpty
+      // mass can round to 0, so the probe full-joins prev (a union and one
+      // keyed aggregation: one shuffle); a node only prev has: NULL change.
+      // The last round is never probed.
+      val none = lit(null).cast("double")
+      if (it == PprIters) cur
+      else cur.select($"node", $"pr", none.as("prev_pr"))
+        .unionByName(prev.select($"node", none.as("pr"), $"pr".as("prev_pr")))
+        .groupBy($"node").agg(max($"pr").as("pr"), max($"prev_pr").as("prev_pr"))
+        .select($"node", $"pr",
+          when($"pr".isNotNull, !($"pr" <=> $"prev_pr")).as(Fixpoint.Changed))
     }
     val top = pr.orderBy($"pr".desc, $"node".asc).limit(20)
     val w = Window.orderBy($"pr".desc, $"node".asc)

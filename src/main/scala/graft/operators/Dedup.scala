@@ -877,7 +877,7 @@ object Dedup {
     * iteration, iterations ~ graph diameter) — the loop that scales to
     * billions of edges.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
+  def connectedComponents(pairs: DataFrame,
       driverEdgeLimit: Long = 2000000L): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
@@ -906,39 +906,30 @@ object Dedup {
       // from the original `pairs` lineage would recompute the entire
       // upstream candidate+verify chain (cache hits match by plan), and
       // the threshold count's cache would leak
-      val out = distributedCC(edgeRows, maxIter)
+      val out = distributedCC(edgeRows)
       edgeRows.unpersist() // loop labels are materialized; cache is dead
       out
     }
   }
 
-  private def distributedCC(pairs: DataFrame, maxIter: Int): DataFrame = {
+  /** Min-label propagation through [[Fixpoint]], uncapped: it is monotone,
+    * so it converges within diameter + 1 rounds, where a cap would not. */
+  private def distributedCC(pairs: DataFrame): DataFrame = {
     val edges = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(pairs.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .persist()
-    var labels = edges.select(col("a").as("doc_id"))
-      .distinct().withColumn("label", col("doc_id")).persist()
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+      .repartition(col("a"))
+    val init = edges.select(col("a").as("doc_id"))
+      .distinct().withColumn("label", col("doc_id"))
+    val labels = Fixpoint(Int.MaxValue, edges)(init) { (prev, _) =>
       val viaNeighbors = edges
-        .join(labels.withColumnRenamed("doc_id", "a"), "a")
+        .join(prev.withColumnRenamed("doc_id", "a"), "a")
         .groupBy(col("b").as("doc_id"))
         .agg(min(col("label")).as("nlabel"))
-      val next = labels.join(viaNeighbors, Seq("doc_id"), "left")
+      prev.join(viaNeighbors, Seq("doc_id"), "left")
         .select(col("doc_id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .persist()
-      changed = next.join(labels.withColumnRenamed("label", "old"), "doc_id")
-        .filter(col("label") =!= col("old")).count()
-      // next is materialized by the count above; the previous iteration's
-      // labels are dead — release them so a deep graph doesn't accumulate
-      // one cached copy of the label table per iteration
-      labels.unpersist()
-      labels = next
-      iter += 1
+          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
+          coalesce(col("nlabel") < col("label"), lit(false)).as(Fixpoint.Changed))
     }
-    edges.unpersist()
     labels.select(col("doc_id"), col("label").as("canonical_id"))
   }
 

@@ -923,18 +923,17 @@ object Extended {
       .select($"variant",
         explode(array(lit("CONV"), lit("DROP"))).as("st"))
       .select($"variant", $"st".as("src"), $"st".as("dst"), lit(1.0).as("p"))
-    val pmat = redirected.unionByName(absorbing).persist()
-    var v = variants
+    val pmat = redirected.unionByName(absorbing)
+    val v0 = variants
       .select($"variant", lit("START").as("state"), lit(1.0).as("prob"))
       .localCheckpoint()
-    for (_ <- 1 to MarkovSteps) {
-      v = v.as("v")
+    val v = Fixpoint(MarkovSteps, pmat)(v0) { (prev, _) =>
+      prev.as("v")
         .join(pmat.as("m"),
           $"v.variant" === $"m.variant" && $"v.state" === $"m.src")
         .groupBy($"v.variant", $"m.dst")
         .agg(round(sum($"v.prob" * $"m.p"), 12).as("prob"))
         .select($"variant", $"dst".as("state"), $"prob")
-        .localCheckpoint()
     }
     val conv = v.filter($"state" === "CONV")
     val base = conv.filter($"variant" === "_base")

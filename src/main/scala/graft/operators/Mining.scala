@@ -54,7 +54,7 @@ object Mining {
   private def hyperballRun(s: SparkSession, dir: String,
       withExact: Boolean): Seq[(Int, Long, Long)] = {
     import s.implicits._
-    val edges = csEdges(s, dir).persist()
+    val edges = csEdges(s, dir).repartition($"src").persist()
     val nodes = edges.select($"src".as("node")).distinct()
     // one HLL register file per node — the singleton sketches both arms
     // start from.
@@ -72,19 +72,18 @@ object Mining {
       // PRODUCTION arm: the HyperBall iteration proper — S_0(u) = {u},
       // S_h(u) = S_{h-1}(u) ∪ ⋃_{(u,w)∈E} S_{h-1}(w); one shuffle per
       // hop, O(nodes · sketch) state, N(h) = Σ_u estimate(S_h(u)).
-      var sk = sk0
-      def record(h: Int): Unit =
+      def record(h: Int, sk: DataFrame): Unit =
         rows += ((h, -1L,
           sk.agg(sum(hll_sketch_estimate($"sk"))).as[Long].head()))
-      record(0)
-      for (h <- 1 to HyperBallHops) {
-        sk = edges.join(sk.withColumnRenamed("node", "src"), Seq("src"))
+      // each round records the hop it starts from; the last hop after
+      val sk = Fixpoint(HyperBallHops, edges)(sk0) { (prev, h) =>
+        record(h - 1, prev)
+        edges.join(prev.withColumnRenamed("node", "src"), Seq("src"))
           .select($"dst".as("node"), $"sk")
-          .unionByName(sk)
+          .unionByName(prev)
           .groupBy($"node").agg(hll_union_agg($"sk").as("sk"))
-          .localCheckpoint()
-        record(h)
       }
+      record(HyperBallHops, sk)
     } else {
       // VERIFICATION arm (test-scale harness, the q53/q253 fixed-sample
       // rule): md5-ranked FIXED seed set, exact balls as one 64-bit
@@ -112,11 +111,11 @@ object Mining {
       val seedsIdx = seeds.select($"seed",
         (row_number().over(Window.orderBy(
           md5(concat(lit("hb:"), $"seed")).asc, $"seed".asc)) - 1).as("bit"))
-      var mask = seedsIdx
+      val mask0 = seedsIdx
         .select($"seed".as("node"),
           expr("shiftleft(CAST(1 AS BIGINT), bit)").as("m"))
         .localCheckpoint()
-      def record(h: Int): Unit = {
+      def record(h: Int, mask: DataFrame): Unit = {
         val exact = mask.agg(sum(bit_count($"m"))).as[Long].head()
         val approx =
           if (h == 0)
@@ -135,17 +134,15 @@ object Mining {
               .agg(sum(hll_sketch_estimate($"sk"))).as[Long].head()
         rows += ((h, exact, approx))
       }
-      record(0)
-      for (h <- 1 to HyperBallHops) {
-        mask = edges.join(mask.withColumnRenamed("node", "src"), Seq("src"))
+      val mask = Fixpoint(HyperBallHops, edges)(mask0) { (prev, h) =>
+        record(h - 1, prev)
+        edges.join(prev.withColumnRenamed("node", "src"), Seq("src"))
           .select($"dst".as("node"), $"m")
-          .unionByName(mask)
+          .unionByName(prev)
           .groupBy($"node").agg(expr("bit_or(m)").as("m"))
-          .localCheckpoint()
-        record(h)
       }
+      record(HyperBallHops, mask)
     }
-    edges.unpersist()
     rows.toSeq
   }
 
@@ -208,7 +205,7 @@ object Mining {
     * shuffle until the vocabulary-keyed groupBy, and the vocabulary is
     * the bounded thing at 100 TB (edges aggregate to V², V = distinct
     * tokens, while the token stream is the corpus). Weighted PageRank
-    * then runs q89's discipline: per-round localCheckpoint, round(,10)
+    * then runs q89's discipline: [[Fixpoint]] rounds, round(,10)
     * pinning, contributions proportional to edge weight / weighted
     * degree. Oracle: same tokenization + unrolled 3-CTE recursion.
     */
@@ -227,12 +224,12 @@ object Mining {
       .groupBy($"a".as("src"), $"b".as("dst"))
       .agg(count(lit(1)).cast("double").as("w"))
       .persist()
-    val wdeg = edges.groupBy($"src").agg(sum($"w").as("wdeg"))
+    val wdeg = edges.groupBy($"src").agg(sum($"w").as("wdeg")).persist()
     val n = wdeg.count().toDouble
-    var pr = wdeg.select($"src".as("node"), lit(1.0 / n).as("pr"))
-    for (_ <- 1 to TrIters) {
-      pr = edges
-        .join(pr.withColumnRenamed("node", "src"), Seq("src"))
+    val init = wdeg.select($"src".as("node"), lit(1.0 / n).as("pr"))
+    val pr = Fixpoint(TrIters, edges, wdeg)(init) { (prev, _) =>
+      edges
+        .join(prev.withColumnRenamed("node", "src"), Seq("src"))
         .join(wdeg, Seq("src"))
         .select($"dst", ($"pr" * $"w" / $"wdeg").as("contrib"))
         .groupBy($"dst")
@@ -240,9 +237,7 @@ object Mining {
         .select($"dst".as("node"),
           round(lit((1 - TrDamping) / n) + lit(TrDamping) * $"in_pr", 10)
             .as("pr"))
-        .localCheckpoint()
     }
-    edges.unpersist()
     val top = pr.orderBy($"pr".desc, $"node".asc).limit(20)
     val w = Window.orderBy($"pr".desc, $"node".asc)
     top.withColumn("rank", row_number().over(w))

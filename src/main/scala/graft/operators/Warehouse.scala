@@ -203,41 +203,33 @@ object Warehouse {
     * hidden), rounds 1.. = the cascade, which is the actual
     * demonstration: removing the sparse fringe re-exposes new
     * under-degree nodes round after round. Scale shape: per round one
-    * semi-join-restricted degree count + one anti-join, all keyed on
-    * node — frontier-proportional like q145, never quadratic;
-    * localCheckpoint per round keeps plan depth constant (the q133
-    * discipline). Early stop when a round removes nothing (every later
-    * round would no-op, exactly as the oracle's remaining CTEs do).
+    * semi-join-restricted degree count + one left join, all keyed on
+    * node — frontier-proportional like q145, never quadratic; rounds
+    * run through [[Fixpoint]]. Early stop when a round removes nothing
+    * (every later round would no-op, exactly as the oracle's remaining
+    * CTEs do).
     */
   def q202KcorePeel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val canon = knnCoSupplyEdges(s, dir)
     val edges = canon.select($"sa".as("src"), $"sb".as("dst"))
       .unionByName(canon.select($"sb".as("src"), $"sa".as("dst")))
-      .persist()
-    var live = edges.select($"src".as("node")).distinct().localCheckpoint()
-    var peeled: Option[DataFrame] = None
-    var round = 1
-    var done = false
-    while (round <= PeelRounds && !done) {
+    // the state is every node with the round that peeled it (NULL while
+    // live), so a round's removal set is its change set
+    val init = edges.select($"src".as("node")).distinct()
+      .withColumn("peel_round", lit(null).cast("int"))
+    val peel = Fixpoint(PeelRounds, edges)(init) { (prev, round) =>
+      val live = prev.filter($"peel_round".isNull)
       val deg = edges
         .join(live.select($"node".as("src")), Seq("src"), "left_semi")
         .join(live.select($"node".as("dst")), Seq("dst"), "left_semi")
         .groupBy($"src".as("node")).agg(count(lit(1)).as("c"))
-      val rem = live.join(deg, Seq("node"), "left")
-        .filter(coalesce($"c", lit(0L)) < CoreK)
-        .select($"node", lit(round).as("peel_round"))
-        .localCheckpoint()
-      if (rem.isEmpty) done = true
-      else {
-        peeled = Some(peeled.map(_.unionByName(rem)).getOrElse(rem))
-        live = live.join(rem.select($"node"), Seq("node"), "left_anti")
-          .localCheckpoint()
-      }
-      round += 1
+      val cut = $"peel_round".isNull && coalesce($"c", lit(0L)) < CoreK
+      prev.join(deg, Seq("node"), "left")
+        .select($"node", when(cut, lit(round)).otherwise($"peel_round")
+          .as("peel_round"), cut.as(Fixpoint.Changed))
     }
-    val surv = live.select($"node", lit(0).as("peel_round"))
-    peeled.map(_.unionByName(surv)).getOrElse(surv)
+    peel.select($"node", coalesce($"peel_round", lit(0)).as("peel_round"))
       .groupBy($"peel_round")
       .agg(count(lit(1)).as("n_nodes"),
         min($"node").as("first_node"), max($"node").as("last_node"))
@@ -305,18 +297,17 @@ object Warehouse {
     * co-supply graph has pockets of triangles but no 2-triangle-deep
     * edge community). Per round: one canonical 3-way self-join
     * (degree-bounded, the q102 shape) + corner-explode to per-edge
-    * support + one anti-join — all keyed on the edge pair;
-    * localCheckpoint per round (q133 discipline). The oracle unrolls
+    * support + one left join — all keyed on the edge pair; rounds run
+    * through [[Fixpoint]], q202's peel-round state. The oracle unrolls
     * the same rounds as MATERIALIZED CTEs (q202's exponential-inlining
     * lesson).
     */
   def q208KtrussPeel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    var cur = knnCoSupplyEdges(s, dir).localCheckpoint()
-    var peeled: Option[DataFrame] = None
-    var round = 1
-    var done = false
-    while (round <= TrussRounds && !done) {
+    val init = knnCoSupplyEdges(s, dir)
+      .withColumn("peel_round", lit(null).cast("int")).localCheckpoint()
+    val peel = Fixpoint(TrussRounds)(init) { (prev, round) =>
+      val cur = prev.filter($"peel_round".isNull).select($"sa", $"sb")
       val tri = cur.as("e1")
         .join(cur.as("e2"), $"e1.sb" === $"e2.sa")
         .select($"e1.sa".as("x"), $"e1.sb".as("y"), $"e2.sb".as("z"))
@@ -326,20 +317,13 @@ object Warehouse {
         .unionByName(tri.select($"y".as("sa"), $"z".as("sb")))
         .unionByName(tri.select($"x".as("sa"), $"z".as("sb")))
         .groupBy($"sa", $"sb").agg(count(lit(1)).as("sup"))
-      val rem = cur.join(support, Seq("sa", "sb"), "left")
-        .filter(coalesce($"sup", lit(0L)) < TrussMinSupport)
-        .select($"sa", $"sb", lit(round).as("peel_round"))
-        .localCheckpoint()
-      if (rem.isEmpty) done = true
-      else {
-        peeled = Some(peeled.map(_.unionByName(rem)).getOrElse(rem))
-        cur = cur.join(rem.select($"sa", $"sb"), Seq("sa", "sb"), "left_anti")
-          .localCheckpoint()
-      }
-      round += 1
+      val cut = $"peel_round".isNull &&
+        coalesce($"sup", lit(0L)) < TrussMinSupport
+      prev.join(support, Seq("sa", "sb"), "left")
+        .select($"sa", $"sb", when(cut, lit(round)).otherwise($"peel_round")
+          .as("peel_round"), cut.as(Fixpoint.Changed))
     }
-    val surv = cur.select($"sa", $"sb", lit(0).as("peel_round"))
-    peeled.map(_.unionByName(surv)).getOrElse(surv)
+    peel.select($"sa", $"sb", coalesce($"peel_round", lit(0)).as("peel_round"))
       .groupBy($"peel_round")
       .agg(count(lit(1)).as("n_edges"),
         min($"sa").as("min_node"), max($"sb").as("max_node"))
@@ -1497,8 +1481,8 @@ object Warehouse {
     * day points at every other customer ordering that day; repeat hubs
     * weave the cores together, one-time customers stay periphery.
     * Scale shape: every step is a keyed join on vertex or edge ends —
-    * frontier-proportional, never quadratic; per-round
-    * localCheckpoint (the q133 discipline) keeps plan depth constant;
+    * frontier-proportional, never quadratic; the trim and label loops
+    * run through [[Fixpoint]];
     * the label tables are one row per LIVE vertex and shrink
     * monotonically. Oracle: recursive-CTE closure + mutual-reach
     * minimum (exact, era-bounded so the closure stays ~1M pairs).
@@ -1527,12 +1511,14 @@ object Warehouse {
       require(outer <= SccMaxRounds,
         s"q215: $SccMaxRounds rounds without convergence — not a plausible SCC count")
       // TRIM to a fixpoint: a vertex with no live in-edge or no live
-      // out-edge can't sit on a cycle — it is its own SCC
-      var trimming = true
-      while (trimming && !active.isEmpty) {
+      // out-edge can't sit on a cycle — it is its own SCC. The state
+      // flags trimmed vertices, so a round's trimmings are its changes.
+      val trim0 = active.withColumn("trimmed", lit(false))
+      val trim = Fixpoint(Int.MaxValue)(trim0) { (prev, _) =>
+        val live = prev.filter(!$"trimmed")
         val liveE = edges
-          .join(active.select($"v".as("src")), Seq("src"), "left_semi")
-          .join(active.select($"v".as("dst")), Seq("dst"), "left_semi")
+          .join(live.select($"v".as("src")), Seq("src"), "left_semi")
+          .join(live.select($"v".as("dst")), Seq("dst"), "left_semi")
         // both-endpoint survivors in ONE pass over liveE: explode each
         // edge into its two endpoint roles and aggregate per vertex —
         // r15, replacing two distinct()s + a semi-join (three shuffles
@@ -1546,47 +1532,36 @@ object Warehouse {
           .groupBy($"e.v".as("v"))
           .agg(max($"e.o").as("ho"), max($"e.i").as("hi"))
           .filter($"ho" === 1 && $"hi" === 1)
-          .select($"v")
-          .localCheckpoint()
-        val trivial = active.join(keep, Seq("v"), "left_anti")
-        if (trivial.isEmpty) trimming = false
-        else {
-          decide(trivial.select($"v", $"v".as("scc_id")).localCheckpoint())
-          active = keep
-        }
+          .select($"v", lit(true).as("kept"))
+        val cut = !$"trimmed" && $"kept".isNull
+        prev.join(keep, Seq("v"), "left")
+          .select($"v", ($"trimmed" || cut).as("trimmed"),
+            cut.as(Fixpoint.Changed))
       }
+      decide(trim.filter($"trimmed").select($"v", $"v".as("scc_id")))
+      active = trim.filter(!$"trimmed").select($"v")
       if (!active.isEmpty) {
         val liveE = edges
           .join(active.select($"v".as("src")), Seq("src"), "left_semi")
           .join(active.select($"v".as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint()
         // F and B min-label fixpoints run in LOCKSTEP — one label table
         // carries both, so each round costs one checkpoint + one
-        // convergence count instead of two of each (round count is
-        // max(dF, dB), not dF + dB; on a local[32] harness the
-        // per-round job overhead dominates these tiny frames)
-        var lab = active.select($"v", $"v".as("f"), $"v".as("b"))
-          .localCheckpoint()
-        var changed = 1L
-        while (changed > 0) {
-          val fmin = liveE.join(lab.select($"v".as("src"), $"f"), Seq("src"))
+        // convergence probe instead of two of each (round count is
+        // max(dF, dB), not dF + dB; the per-round job overhead
+        // dominates these tiny frames); monotone, so it runs uncapped.
+        val lab0 = active.select($"v", $"v".as("f"), $"v".as("b"))
+        val lab = Fixpoint(Int.MaxValue, liveE)(lab0) { (prev, _) =>
+          val fmin = liveE.join(prev.select($"v".as("src"), $"f"), Seq("src"))
             .groupBy($"dst".as("v")).agg(min($"f").as("fm"))
-          val bmin = liveE.join(lab.select($"v".as("dst"), $"b"), Seq("dst"))
+          val bmin = liveE.join(prev.select($"v".as("dst"), $"b"), Seq("dst"))
             .groupBy($"src".as("v")).agg(min($"b").as("bm"))
-          // r15: the changed flag rides the checkpointed frame itself
-          // (old f/b are join inputs already), so the convergence probe
-          // is a filter-count over materialized rows — the previous
-          // form re-joined next against lab per iteration (one more
-          // shuffle join + job on every round of every peel)
-          val next = lab
-            .join(fmin, Seq("v"), "left").join(bmin, Seq("v"), "left")
+          // old f/b are join inputs already, so the change flag rides
+          // the checkpointed frame
+          prev.join(fmin, Seq("v"), "left").join(bmin, Seq("v"), "left")
             .select($"v", least($"f", coalesce($"fm", $"f")).as("f"),
               least($"b", coalesce($"bm", $"b")).as("b"),
-              ($"fm".isNotNull && $"fm" < $"f" ||
-                $"bm".isNotNull && $"bm" < $"b").as("chg"))
-            .localCheckpoint()
-          changed = next.filter($"chg").count()
-          lab = next.select($"v", $"f", $"b")
+              (coalesce($"fm" < $"f", lit(false)) ||
+                coalesce($"bm" < $"b", lit(false))).as(Fixpoint.Changed))
         }
         val scc = lab.filter($"f" === $"b")
           .select($"v", $"f".as("scc_id"))

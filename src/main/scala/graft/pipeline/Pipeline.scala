@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,8 +16,9 @@ import graft.operators.{Incremental, Scd2}
   * core and star (which is what makes current-only dims possible), and
   * tests once at the end.
   *
-  * Storage: Parquet per layer directory with atomic overwrite-swap
-  * (write tmp → swap), making re-runs idempotent like MERGE. At
+  * Storage: Parquet per layer directory, committed through
+  * [[ParquetIO]]'s versioned pointer (write a new version, then flip
+  * `_current`), making re-runs idempotent like MERGE. At
   * warehouse scale the same code targets bucketed tables (key-bucketed
   * upserts avoid the existing side's shuffle) or Delta MERGE — the
   * helpers are signature-compatible (SURVEY.md §7.3).
@@ -51,7 +49,7 @@ final class Pipeline(spark: SparkSession, workDir: String) {
     */
   private def writeIncremental(
       layer: String, table: String, key: Seq[String],
-      watermarkCol: String, batch: DataFrame,
+      watermarkCol: String,
       transform: Option[java.sql.Timestamp] => DataFrame,
       fullRefresh: Boolean = false): Unit = {
     if (fullRefresh || !exists(layer, table)) {
@@ -123,17 +121,14 @@ final class Pipeline(spark: SparkSession, workDir: String) {
 
     // ---- staging (incremental, watermark on RAW ingested_at) ----
     writeIncremental("staging", "stg_wiki_sp500", Seq("cik"), "ingested_at",
-      read("raw", "wiki_sp500"),
       hwm => Staging.stgWikiSp500(hwm.foldLeft(read("raw", "wiki_sp500"))(
         (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
     writeIncremental("staging", "stg_fortune500", Seq("company_name"), "ingested_at",
-      read("raw", "fortune_500"),
       hwm => Staging.stgFortune500(hwm.foldLeft(read("raw", "fortune_500"))(
         (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
 
     // ---- core (incremental on cik, cross-source watermark quirk) ----
     writeIncremental("core", "cr_company_complete", Seq("cik"), "last_updated",
-      read("staging", "stg_fortune500"),
       hwm => Core.crCompanyComplete(
         read("staging", "stg_fortune500"), read("staging", "stg_wiki_sp500"), hwm),
       fullRefresh)
@@ -152,7 +147,7 @@ final class Pipeline(spark: SparkSession, workDir: String) {
     overwriteSwap(Star.dimFortuneMetrics(read("snapshots", "fortune_metrics_snapshot")),
       "analytics", "dim_fortune_metrics")
     writeIncremental("analytics", "fact_company_performance", Seq("company_key"),
-      "last_updated", core,
+      "last_updated",
       hwm => Star.factCompanyPerformance(hwm.foldLeft(core)(
         (df, ts) => df.filter(col("last_updated") > lit(ts)))), fullRefresh)
 

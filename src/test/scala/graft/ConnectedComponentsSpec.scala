@@ -33,6 +33,18 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(dist.toSeq == expected)
   }
 
+  test("distributed label propagation runs a long path to its fixed point") {
+    import spark.implicits._
+    // diameter 29: past any fixed round cap of 20
+    val pairs = (1L to 29L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val local = Dedup.connectedComponents(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val dist = Dedup.connectedComponents(pairs, driverEdgeLimit = 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    assert(local.toSeq == (1L to 30L).map(_ -> 1L))
+    assert(dist.toSeq == local.toSeq)
+  }
+
   test("q301 quotient-graph incremental CC equals the full q40 recompute, and the delta genuinely merges") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"

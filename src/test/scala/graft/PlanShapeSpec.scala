@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Locks in the physical-plan properties the 100 TB design depends on
-  * (PLANS.md) so a refactor can't silently regress them: filter pushdown
+  * (the plan audits now recorded in CHANGES.md) so a refactor can't silently regress them: filter pushdown
   * reaching the scan, column pruning, broadcast dim joins, and the
   * absence of cross products outside the two documented baselines.
   */
